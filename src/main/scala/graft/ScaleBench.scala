@@ -285,7 +285,8 @@ object ScaleBench {
           }
         val base = spark.read.parquet(s"$dir/documents.parquet")
           .filter(col("doc_id") % 3 =!= 0)
-        val store = s"/tmp/graft_sigstore_scale_p1_$mult"
+        val store = s"/tmp/graft_sigstore_scale_p1_" +
+          s"${graft.operators.Dedup.SigFamily}_$mult"
         val fs = org.apache.hadoop.fs.FileSystem.get(
           spark.sparkContext.hadoopConfiguration)
         val (wsec, _) = time {
@@ -325,8 +326,10 @@ object ScaleBench {
           }
         val base = spark.read.parquet(s"$dir/documents.parquet")
           .filter(col("doc_id") % 3 =!= 0)
-        val sigStore = s"/tmp/graft_clmaprung_sigs_p1_$mult"
-        val baseMap = s"/tmp/graft_clmaprung_map_p1_$mult"
+        val sigStore = s"/tmp/graft_clmaprung_sigs_p1_" +
+          s"${graft.operators.Dedup.SigFamily}_$mult"
+        val baseMap = s"/tmp/graft_clmaprung_map_p1_" +
+          s"${graft.operators.Dedup.SigFamily}_$mult"
         if (!fs.exists(new org.apache.hadoop.fs.Path(sigStore)))
           graft.operators.Dedup.writeSignatureStore(base, sigStore)
         val (bsec, _) = time {
@@ -381,7 +384,8 @@ object ScaleBench {
           }
         val base = spark.read.parquet(s"$dir/documents.parquet")
           .filter(col("doc_id") % 3 =!= 0)
-        val store = s"/tmp/graft_ctstore_rung_p1_$mult"
+        val store = s"/tmp/graft_ctstore_rung_p1_" +
+          s"${graft.operators.Dedup.SigFamily}_$mult"
         val (bsec, _) = time {
           if (!fs.exists(new org.apache.hadoop.fs.Path(s"$store/_SUCCESS")))
             graft.operators.Dedup.writeContainmentStore(base, store)
@@ -439,7 +443,8 @@ object ScaleBench {
           }
         val docsAll = spark.read.parquet(s"$dir/documents.parquet")
         val base = docsAll.filter(col("doc_id") % 3 =!= 0)
-        val root = s"/tmp/graft_iloop_rung_p2_$mult"
+        val root = s"/tmp/graft_iloop_rung_p2_" +
+          s"${graft.operators.Dedup.SigFamily}_$mult"
         val (bsec, _) = time {
           if (!fs.exists(new org.apache.hadoop.fs.Path(s"$root/_SUCCESS"))) {
             graft.operators.Dedup.writeSignatureStore(base, s"$root/sigs")
@@ -661,7 +666,8 @@ object ScaleBench {
           else ampCorpusDir(mult)
         val base = spark.read.parquet(s"$dir/documents.parquet")
           .filter(col("doc_id") % 3 =!= 0)
-        val store = s"/tmp/graft_sigstore_scale_p1_$mult"
+        val store = s"/tmp/graft_sigstore_scale_p1_" +
+          s"${graft.operators.Dedup.SigFamily}_$mult"
         val fs = org.apache.hadoop.fs.FileSystem.get(
           spark.sparkContext.hadoopConfiguration)
         if (!fs.exists(new org.apache.hadoop.fs.Path(store)))

@@ -24,9 +24,10 @@ import org.apache.spark.unsafe.types.UTF8String
     *  ANN scoring path.
   *  - [[MinHashSignature]]: a `TypedImperativeAggregate` computing the
     *  full k-minhash signature in ONE pass with a primitive
-    *  `Array[Long]` buffer — replaces k separate `min(xxhash64(...))`
-    *  aggregate columns (k× less expression tree, same single
-    *  shuffle, identical map-side partial-aggregation shape).
+    *  `Array[Long]` buffer — one md5 per shingle and k universal-hash
+    *  permutations of it (the portable family of
+    *  [[MinHashSignature$]], whose DuckDB form is `minsSql`), same
+    *  single shuffle, map-side partial aggregation.
   */
 object VectorFunctions {
 
@@ -626,11 +627,53 @@ case class CosineSimilarity(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** One-pass k-minhash signature over a (string) shingle column:
-  * `sig[i] = min over rows of xxhash64(shingle, seed = i)`. Buffer is a
-  * primitive Array[Long]; partial aggregation merges element-wise
-  * minima, so the shuffle carries one signature per group, not per
-  * row.
+/** The one MinHash family (Broder's min-wise permutations, STOC 1998)
+  * over a 31-bit fold of the house md5 shingle hash: with
+  * `p = 2^31 − 1` and `h = md5_prefix60(sh) mod p`, slot i keeps
+  * `min((a_i·h + b_i) mod p)`, where `a_i = 1 + md5_prefix60("a:i")
+  * mod (p − 1)` and `b_i = md5_prefix60("b:i") mod p`. Every operand
+  * is below 2^31, so `a_i·h + b_i < 2^62 + 2^31` is exact BIGINT in
+  * Spark and DuckDB alike. The aggregate and [[minsSql]] are the only
+  * two statements of the family; VectorFunctionsSpec pins them
+  * together slot for slot.
+  */
+object MinHashSignature {
+  val P: Long = 2147483647L
+
+  private def fold(s: String): Long =
+    Md5Prefix60.hash(UTF8String.fromString(s))
+
+  /** Multipliers a_i in [1, p − 1]. */
+  private def a(numHashes: Int): Array[Long] =
+    Array.tabulate(numHashes)(i => 1L + fold(s"a:$i") % (P - 1))
+
+  /** Offsets b_i in [0, p). */
+  private def b(numHashes: Int): Array[Long] =
+    Array.tabulate(numHashes)(i => fold(s"b:$i") % P)
+
+  /** DuckDB statement of the family: per-(`keys`, seed) minima `mh`
+    * over the shingle column `sh` of relation `from`, restricted by
+    * `where` when non-empty. The shingle hash is taken once per row;
+    * the seed table carries (a_i, b_i) derived in SQL from the same
+    * md5 prefixes the aggregate uses.
+    */
+  def minsSql(from: String, keys: String, numHashes: Int,
+      where: String = ""): String = {
+    def md5p(x: String) = s"CAST('0x' || substring(md5($x), 1, 15) AS BIGINT)"
+    val w = if (where.isEmpty) "" else s" WHERE $where"
+    s"""SELECT $keys, seed, MIN((a * h + b) % $P) AS mh
+       |  FROM (SELECT $keys, ${md5p("sh")} % $P AS h FROM $from$w) hs
+       |  CROSS JOIN (SELECT seed, 1 + ${md5p("'a:' || seed")} % ${P - 1} AS a,
+       |      ${md5p("'b:' || seed")} % $P AS b
+       |    FROM (SELECT UNNEST(range(0, $numHashes)) AS seed) r) s
+       |  GROUP BY $keys, seed""".stripMargin
+  }
+}
+
+/** One-pass k-minhash signature over a (string) shingle column in the
+  * [[MinHashSignature$]] family. Buffer is a primitive Array[Long];
+  * partial aggregation merges element-wise minima, so the shuffle
+  * carries one signature per group, not per row.
   */
 case class MinHashSignature(
     child: Expression,
@@ -647,14 +690,20 @@ case class MinHashSignature(
   override def createAggregationBuffer(): Array[Long] =
     Array.fill(numHashes)(Long.MaxValue)
 
+  @transient private lazy val a = MinHashSignature.a(numHashes)
+  @transient private lazy val b = MinHashSignature.b(numHashes)
+
   override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
     val v = child.eval(input)
     if (v != null) {
-      val s = v.asInstanceOf[UTF8String]
+      val p = MinHashSignature.P
+      val h = Md5Prefix60.hash(v.asInstanceOf[UTF8String]) % p
+      val aa = a
+      val bb = b
       var i = 0
       while (i < numHashes) {
-        val h = XxHash64Function.hash(s, StringType, i.toLong)
-        if (h < buf(i)) buf(i) = h
+        val m = (aa(i) * h + bb(i)) % p
+        if (m < buf(i)) buf(i) = m
         i += 1
       }
     }

@@ -289,7 +289,7 @@ object Dedup {
     * a `distinct()` — doc_id rides every row, so global distinct ≡
     * within-doc distinct, and the exchange+two-hash-aggregates the
     * old form paid (the dominant term of the md5-LSH signature
-    * pipeline per the r18 OptProbe split) buy nothing a per-row hash
+    * pipeline per the r18 phase split) buy nothing a per-row hash
     * set doesn't. Same row set, zero shuffles (guide §2.4).
     */
   private def shingles(docs: DataFrame): DataFrame =
@@ -297,9 +297,9 @@ object Dedup {
       .select(col("doc_id"),
         explode(array_distinct(expr(shingleArrExpr))).as("sh"))
 
-  /** Width guard for CPU-heavy per-shingle pipelines (×numHashes md5
-    * per shingle, r19): with the shingle `distinct()` exchange gone
-    * map-side, the seed-explode md5 work runs pipelined FROM THE SCAN
+  /** Width guard for CPU-heavy per-shingle pipelines (md5 plus k
+    * multiply-mods per shingle): with the shingle `distinct()` exchange
+    * gone map-side, the signature work runs pipelined FROM THE SCAN
     * — and a single-file fixture parquet (or a small delta) offers one
     * scan task, serializing work the old accidental exchange used to
     * spread. Spread the narrow (doc_id, text) rows across the session
@@ -315,46 +315,88 @@ object Dedup {
   private def widthSpread(docs: DataFrame): DataFrame =
     Kernels.widthSpread(docs, col("doc_id"))
 
-  /** MinHash + LSH banding near-dup candidates — the scale path.
-    * k=64 minhashes per doc (one pass over exploded shingles, 64
-    * `min(xxhash64(seed, shingle))` aggregates — a single shuffle);
-    * signatures banded 16×4 and exploded to (band, bandHash) keys; a
-    * self-join per bucket yields candidates (threshold ≈ (1/16)^(1/4)
-    * ≈ 0.5); estimated similarity = matching signature fraction.
-    * At 100 TB: candidate generation shuffles only (doc, band) rows —
-    * never all pairs — and degenerate buckets are occupancy-guarded
-    * (see [[DefaultBucketCap]]): buckets over the cap link members to
-    * the bucket-min doc linearly instead of pairing quadratically.
-    * xxhash64 is Spark-specific → rows-only check (no DuckDB oracle),
-    * covered by unit test instead.
+  /** The deterministic 1-in-`sampleMod` document sample a sampled
+    * path runs on — `doc_id % sampleMod = 0` in every oracle.
     */
-  /** xxhash64 signatures banded to (doc_id, sig, band, band_hash) —
-    * the shared front end of [[minHashLsh]] and [[incrementalLsh]].
+  private def sampled(docs: DataFrame, sampleMod: Int): DataFrame =
+    docs.filter(pmod(col("doc_id"), lit(sampleMod)) === 0)
+
+  /** Whole-document shingle units of the sample, spread to session
+    * width — the [[bandedSigs]] input of every whole-doc MinHash path.
     */
-  private def bandedXxSigs(docs: DataFrame, numHashes: Int,
+  private def docShingles(docs: DataFrame, sampleMod: Int): DataFrame =
+    shingles(widthSpread(sampled(docs, sampleMod)))
+
+  /** Banded MinHash signatures — the ONE signature front end of every
+    * MinHash path (pair LSH, incremental, stores, clusters,
+    * containment). `units` carries the shingle column `sh` plus the
+    * signature's grouping keys (`doc_id`, or `doc_id, chunk`); the
+    * output adds `sig` (the [[graft.functions.MinHashSignature]]
+    * aggregate: one md5 and k multiply-mods per shingle, one shuffle)
+    * and one row per band carrying its slice `bsig`, the bucket key of
+    * every band join. The oracles' form is [[sigCtes]]. The narrow
+    * (keys, sig) frame is materialized ONCE and the band explode
+    * derived lazily per consumer side — a post-explode checkpoint
+    * would store `bands` copies of every signature, the shared-JVM
+    * heap churn behind the r8 16×-ladder outlier (116 s in-sweep vs
+    * 17 s isolated).
+    */
+  private def bandedSigs(units: DataFrame, numHashes: Int,
       bands: Int): DataFrame = {
     val rowsPerBand = numHashes / bands
-    // one-pass signature via the custom TypedImperativeAggregate —
-    // k× smaller expression tree than k separate min(xxhash64(...))
-    // columns, same single-shuffle partial-agg shape
-    // the expensive shingle → minhash pipeline is materialized ONCE,
-    // as the narrow (doc_id, sig) frame, and the band explode is
-    // derived LAZILY from the checkpoint per consumer side — a
-    // post-explode checkpoint would store `bands` copies of every
-    // 64-element signature (16× the bytes), which was the shared-JVM
-    // heap churn behind the r8 16×-ladder outlier (116 s in-sweep vs
-    // 17 s isolated). Re-deriving the explode from the checkpoint is
-    // a hash-of-slice per band — trivial next to the avoided storage.
-    val sigs = shingles(docs).groupBy("doc_id").agg(
-      graft.functions.VectorFunctions
+    val keys = units.columns.filter(_ != "sh").toSeq.map(col)
+    units.groupBy(keys: _*)
+      .agg(graft.functions.VectorFunctions
         .minhash_signature(col("sh"), numHashes).as("sig"))
       .localCheckpoint()
-    sigs.select(col("doc_id"), col("sig"),
-      posexplode(expr(
-        s"transform(sequence(0, ${bands - 1}), b -> hash(slice(sig, b*$rowsPerBand + 1, $rowsPerBand)))")))
+      .select(keys :+ col("sig") :+ posexplode(expr(
+        s"transform(sequence(0, ${bands - 1}), b -> slice(sig, b*$rowsPerBand + 1, $rowsPerBand))")): _*)
       .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "band_hash")
+      .withColumnRenamed("col", "bsig")
   }
+
+  /** DuckDB form of [[bandedSigs]]: `<prefix>mins` (keys, seed, mh)
+    * from the family's one SQL statement
+    * [[graft.functions.MinHashSignature.minsSql]] and `<prefix>bands`
+    * (keys, band, bsig) — the CTE pair every MinHash oracle bands on.
+    */
+  private def sigCtes(prefix: String, from: String, keys: String,
+      numHashes: Int, bands: Int, where: String = ""): String =
+    s"""${prefix}mins AS (
+       |${graft.functions.MinHashSignature.minsSql(from, keys, numHashes, where)}),
+       |${prefix}bands AS (
+       |  SELECT $keys, seed // ${numHashes / bands} AS band,
+       |    LIST(mh ORDER BY seed) AS bsig
+       |  FROM ${prefix}mins GROUP BY ALL)""".stripMargin
+
+  /** DuckDB shingle CTE body: distinct (doc_id, sh) word 3-grams of the
+    * 1-in-`sampleMod` sample — the [[shingles]] rule.
+    */
+  private def sampledShinglesSql(sampleMod: Int): String =
+    s"""SELECT DISTINCT doc_id,
+       |    concat_ws(' ', arr[j], arr[j + 1], arr[j + 2]) AS sh
+       |  FROM (SELECT doc_id, arr,
+       |          UNNEST(range(1, greatest(len(arr) - 3, 0) + 2)) AS j
+       |        FROM (SELECT doc_id,
+       |                regexp_split_to_array(trim(text), '\\s+') AS arr
+       |              FROM documents
+       |              WHERE doc_id % $sampleMod = 0) t0) t1""".stripMargin
+
+  /** Estimated Jaccard of a joined `a`/`b` signature pair: the
+    * fraction of equal slots (an exact-integer ratio) over the
+    * signature width.
+    */
+  private def estSim: Column =
+    expr("""CAST(aggregate(zip_with(a.sig, b.sig, (x, y) -> IF(x = y, 1, 0)),
+       |     0, (acc, v) -> acc + v) AS DOUBLE) / size(a.sig)""".stripMargin)
+
+  /** Tag of the MinHash family in every cache path holding
+    * MinHash-derived data (signature, containment and cluster stores,
+    * the ingest loop): a store written under an earlier family must
+    * be rebuilt by PATH, never served (the r13 stored-derivation rule;
+    * docs/STORES.md). Bump it whenever the family changes.
+    */
+  private[graft] val SigFamily: String = "mh31"
 
   /** Default per-(band, bucket) occupancy cap for the LSH band
     * self-joins. A band join emits occupancy² candidate pairs per
@@ -389,12 +431,11 @@ object Dedup {
       .select((keys :+ "bmin").map(col): _*)
 
   /** Occupancy-guarded band self-join — the shared candidate
-    * generator behind [[minHashLsh]], [[minHashLshMd5]] and
-    * [[simHashPairs]]. Emits one (d1, d2, score) row per banded
-    * collision (call sites dedup): buckets ≤ `cap` self-join exactly
-    * as before; mega buckets emit bucket-min → member star edges,
-    * linear in occupancy. When no bucket exceeds the cap (every
-    * fixture) the plan is EXACTLY the unguarded self-join — the only
+    * generator behind [[minHashLsh]] and [[simHashPairs]]. Emits one
+    * (d1, d2, score) row per banded collision (call sites dedup):
+    * buckets ≤ `cap` self-join exactly as before; mega buckets emit
+    * bucket-min → member star edges, linear in occupancy. When no
+    * bucket exceeds the cap (every fixture) the plan is EXACTLY the unguarded self-join — the only
     * added work is the occupancy aggregate. The mega-bucket frame is
     * broadcast when small and shuffle-hash-joined past 100k buckets
     * (degenerate-beyond-degenerate corpora), so the guard itself
@@ -445,129 +486,57 @@ object Dedup {
     }
   }
 
-  /** CONSTRUCTING this frame is eager: the signature checkpoint and
-    * the occupancy-guard branch run as jobs before the frame returns
-    * (see [[guardedSelfJoinPairs]]).
+  /** MinHash + LSH banding near-dup candidates — the scale path, and
+    * oracle-checked ([[minHashLshSql]]) since its hash family is
+    * portable. k minhashes per doc ([[bandedSigs]]), banded
+    * `bands`×(k/`bands`) and self-joined per (band, bsig) bucket —
+    * candidate threshold ≈ (1/bands)^(bands/k); estimated similarity
+    * = matching signature fraction. Runs on the 1-in-`sampleMod`
+    * document sample (1 = the whole corpus; the `_md5` entries are the
+    * 16×4, 1-in-2 preset). At 100 TB: candidate generation shuffles
+    * only (doc, band) rows — never all pairs — and degenerate buckets
+    * are occupancy-guarded (see [[DefaultBucketCap]]): buckets over
+    * the cap link members to the bucket-min doc linearly instead of
+    * pairing quadratically. CONSTRUCTING this frame is eager: the
+    * signature checkpoint and the occupancy-guard branch run as jobs
+    * before the frame returns (see [[guardedSelfJoinPairs]]).
     */
   def minHashLsh(docs: DataFrame, numHashes: Int = 64, bands: Int = 16,
-      minEstSim: Double = 0.5,
-      bucketCap: Int = DefaultBucketCap): DataFrame = {
-    val banded = bandedXxSigs(docs, numHashes, bands)
-    // score each banded collision immediately (est_sim is a pure
-    // function of the pair, identical across its ≤`bands` copies),
-    // then dedup three scalars — not a distinct() hauling two
-    // 64-element signature arrays per candidate through the shuffle
-    guardedSelfJoinPairs(banded, Seq("band", "band_hash"), bucketCap)(
-        expr(s"""aggregate(zip_with(a.sig, b.sig, (x, y) -> IF(x = y, 1, 0)),
-           |          0, (acc, v) -> acc + v) / CAST($numHashes AS DOUBLE)""".stripMargin),
-        "est_sim")
-      .groupBy("d1", "d2").agg(first("est_sim").as("est_sim"))
-      .filter(col("est_sim") >= minEstSim)
-      .select("d1", "d2", "est_sim")
-      .orderBy("d1", "d2")
-  }
-
-  /** [[minHashLsh]] with a cross-engine-portable hash family: minhash
-    * h(seed, shingle) = int(md5(seed:shingle)[0:15 hex]) — md5 is
-    * identical in every engine, so unlike the xxhash64 form this
-    * variant is fully DuckDB-oracle-checkable (the hard evidence that
-    * the banding/candidate/estimation pipeline is right; the xxhash64
-    * form stays the bench path — one fused aggregate vs k md5 calls).
-    * Same LSH shape: shuffle on (band, band signature), never
-    * all-pairs. As a verification artifact its budget is capped: 16
-    * hashes × 4 bands over a deterministic 1-in-`sampleMod` document
-    * sample — the proof of pipeline shape doesn't need the full corpus
-    * or the full signature width.
-    */
-  /** md5-family signatures banded to (doc_id, sig, band, bsig) over a
-    * deterministic 1-in-`sampleMod` document sample — the shared front
-    * end of [[minHashLshMd5]] and [[incrementalLshMd5]].
-    */
-  private def bandedMd5Sigs(docs: DataFrame, numHashes: Int, bands: Int,
-      sampleMod: Int): DataFrame = {
-    val rowsPerBand = numHashes / bands
-    val mins = shingles(widthSpread(
-        docs.filter(pmod(col("doc_id"), lit(sampleMod)) === 0)))
-      .select(col("doc_id"), col("sh"),
-        explode(expr(s"sequence(0, ${numHashes - 1})")).as("seed"))
-      .withColumn("h", expr(
-        "md5_prefix60(concat(CAST(seed AS STRING), ':', sh))"))
-      .groupBy("doc_id", "seed").agg(min(col("h")).as("mh"))
-    // same checkpoint discipline as [[bandedXxSigs]]: the md5
-    // signature pipeline is materialized once pre-explode (narrow
-    // (doc_id, sig)); the band slices are derived lazily per side
-    val sigs = mins.groupBy("doc_id")
-      .agg(expr("transform(array_sort(collect_list(struct(seed, mh))), x -> x.mh)")
-        .as("sig"))
-      .localCheckpoint()
-    sigs.select(col("doc_id"), col("sig"),
-      posexplode(expr(
-        s"transform(sequence(0, ${bands - 1}), b -> slice(sig, b*$rowsPerBand + 1, $rowsPerBand))")))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "bsig")
-  }
-
-  /** CONSTRUCTING this frame is eager — signature checkpoint +
-    * occupancy-guard jobs (see [[guardedSelfJoinPairs]]).
-    */
-  def minHashLshMd5(docs: DataFrame, numHashes: Int = 16, bands: Int = 4,
-      minEstSim: Double = 0.5, sampleMod: Int = 2,
+      minEstSim: Double = 0.5, sampleMod: Int = 1,
       bucketCap: Int = DefaultBucketCap): DataFrame =
-    minHashLshMd5Collisions(docs, numHashes, bands, minEstSim, sampleMod,
-        bucketCap)
+    lshCollisions(bandedSigs(docShingles(docs, sampleMod), numHashes, bands),
+        minEstSim, bucketCap)
       .groupBy("d1", "d2").agg(first("est_sim").as("est_sim"))
       .select("d1", "d2", "est_sim")
       .orderBy("d1", "d2")
 
-  /** Per-collision md5-LSH candidate rows — [[minHashLshMd5]] WITHOUT
-    * the terminal (d1, d2) dedup: one row per banded collision (a pair
-    * colliding in k bands appears k times), already threshold-filtered.
-    * `est_sim` is a pure function of the pair's signatures, identical
-    * across its copies, so filtering per collision row ≡ filtering the
-    * deduped pair (what [[minHashLshMd5]] does by grouping first).
-    * Consumers that dedup downstream anyway ([[clustersLshMd5]]'s edge
-    * canonicalization inside [[connectedComponents]]) take this form
-    * and skip one whole exchange+aggregate per clustering entry (r18).
-    * CONSTRUCTION IS EAGER (the [[guardedSelfJoinPairs]] convention).
+  /** Per-collision LSH candidate rows of a banded signature frame —
+    * [[minHashLsh]] WITHOUT the terminal (d1, d2) dedup: one row per
+    * banded collision (a pair colliding in k bands appears k times),
+    * already threshold-filtered. `est_sim` is a pure function of the
+    * pair's signatures, identical across its copies, so filtering per
+    * collision row ≡ filtering the deduped pair. Consumers that dedup
+    * downstream anyway ([[connectedComponents]]' edge
+    * canonicalization) take this form and skip one whole
+    * exchange+aggregate (r18). CONSTRUCTION IS EAGER (the
+    * [[guardedSelfJoinPairs]] convention).
     */
-  private[operators] def minHashLshMd5Collisions(docs: DataFrame,
-      numHashes: Int = 16, bands: Int = 4, minEstSim: Double = 0.5,
-      sampleMod: Int = 2, bucketCap: Int = DefaultBucketCap): DataFrame = {
-    val banded = bandedMd5Sigs(docs, numHashes, bands, sampleMod)
-    // same per-collision scoring as [[minHashLsh]]
+  private def lshCollisions(banded: DataFrame, minEstSim: Double,
+      bucketCap: Int): DataFrame =
     guardedSelfJoinPairs(banded, Seq("band", "bsig"), bucketCap)(
-        expr(s"""CAST(aggregate(zip_with(a.sig, b.sig, (x, y) -> IF(x = y, 1, 0)),
-           |     0, (acc, v) -> acc + v) AS DOUBLE) / $numHashes""".stripMargin),
-        "est_sim")
+        estSim, "est_sim")
       .filter(col("est_sim") >= minEstSim)
-  }
 
-  /** DuckDB oracle for [[minHashLshMd5]] — the same md5-derived hash
-    * family via `CAST('0x…' AS BIGINT)`, banding via list-valued group
-    * keys, estimation via a pairwise seed join.
+  /** DuckDB oracle for [[minHashLsh]] — the family's SQL form
+    * ([[sigCtes]]), banding via list-valued group keys, estimation via
+    * a pairwise seed join.
     */
-  def minHashLshMd5Sql(numHashes: Int = 16, bands: Int = 4,
-      minEstSim: Double = 0.5, sampleMod: Int = 2,
-      ordered: Boolean = true): String = {
-    val rowsPerBand = numHashes / bands
+  def minHashLshSql(numHashes: Int = 64, bands: Int = 16,
+      minEstSim: Double = 0.5, sampleMod: Int = 1,
+      ordered: Boolean = true): String =
     s"""WITH sh AS (
-       |  SELECT DISTINCT doc_id,
-       |    concat_ws(' ', arr[j], arr[j + 1], arr[j + 2]) AS sh
-       |  FROM (SELECT doc_id, arr,
-       |          UNNEST(range(1, greatest(len(arr) - 3, 0) + 2)) AS j
-       |        FROM (SELECT doc_id,
-       |                regexp_split_to_array(trim(text), '\\s+') AS arr
-       |              FROM documents
-       |              WHERE doc_id % $sampleMod = 0) t0) t1),
-       |mins AS (
-       |  SELECT doc_id, seed,
-       |    MIN(CAST('0x' || substring(md5(seed || ':' || sh), 1, 15) AS BIGINT)) AS mh
-       |  FROM sh CROSS JOIN (SELECT UNNEST(range(0, $numHashes)) AS seed) s
-       |  GROUP BY 1, 2),
-       |bands AS (
-       |  SELECT doc_id, seed // $rowsPerBand AS band,
-       |    LIST(mh ORDER BY seed) AS bsig
-       |  FROM mins GROUP BY 1, 2),
+       |${sampledShinglesSql(sampleMod)}),
+       |${sigCtes("", "sh", "doc_id", numHashes, bands)},
        |cands AS (
        |  SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
        |  FROM bands a JOIN bands b
@@ -581,12 +550,11 @@ object Dedup {
        |GROUP BY 1, 2
        |HAVING est_sim >= $minEstSim""".stripMargin +
       (if (ordered) "\nORDER BY d1, d2" else "")
-  }
 
   /** [[containmentPairs]]' 100 TB path — the banded-candidate rewrite
     * (real code as of r10; the exact inverted-index form stays the
-    * sampled yardstick): candidates come from the SHARED md5
-    * minhash-LSH front end ([[bandedMd5Sigs]] — same sample, same
+    * sampled yardstick): candidates come from the SHARED
+    * minhash-LSH front end ([[bandedSigs]] — same sample, same
     * occupancy guards via [[guardedSelfJoinPairs]]), and exact SHINGLE
     * containment is computed on candidates only — never all pairs.
     * The identity C(A→B) = J(A,B)·(|A∪B|/|A|) states the effective
@@ -613,15 +581,13 @@ object Dedup {
   def containmentLshMd5(docs: DataFrame, tau: Double = 0.5,
       numHashes: Int = 16, bands: Int = 4, sampleMod: Int = 2,
       bucketCap: Int = DefaultBucketCap): DataFrame = {
-    val banded = bandedMd5Sigs(docs, numHashes, bands, sampleMod)
+    val banded = bandedSigs(docShingles(docs, sampleMod), numHashes, bands)
     val cands = guardedSelfJoinPairs(banded, Seq("band", "bsig"), bucketCap)(
         lit(1), "one")
       .select("d1", "d2").distinct()
     // narrow (doc_id, 60-bit shingle hash) set frame, read three times
     // (sizes + both intersection sides) → checkpoint once
-    val sh = shingles(docs.filter(pmod(col("doc_id"), lit(sampleMod)) === 0))
-      .select(col("doc_id"), expr(shingleHashExpr).as("h"))
-      .localCheckpoint()
+    val sh = shingleHashFrame(sampled(docs, sampleMod)).localCheckpoint()
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val common = cands.hint("shuffle_hash")
       .join(sh.select(col("doc_id").as("d1"), col("h")), "d1")
@@ -644,36 +610,20 @@ object Dedup {
       .orderBy("d1", "d2")
   }
 
-  /** DuckDB oracle for [[containmentLshMd5]] — same md5 minhash
-    * banding as [[minHashLshMd5Sql]], then exact shingle containment
+  /** DuckDB oracle for [[containmentLshMd5]] — the same minhash
+    * banding as [[minHashLshSql]], then exact shingle containment
     * on the banded candidates only.
     */
   def containmentLshMd5Sql(tau: Double = 0.5, numHashes: Int = 16,
-      bands: Int = 4, sampleMod: Int = 2): String = {
-    val rowsPerBand = numHashes / bands
+      bands: Int = 4, sampleMod: Int = 2): String =
     s"""WITH sh AS (
-       |  SELECT DISTINCT doc_id,
-       |    concat_ws(' ', arr[j], arr[j + 1], arr[j + 2]) AS sh
-       |  FROM (SELECT doc_id, arr,
-       |          UNNEST(range(1, greatest(len(arr) - 3, 0) + 2)) AS j
-       |        FROM (SELECT doc_id,
-       |                regexp_split_to_array(trim(text), '\\s+') AS arr
-       |              FROM documents
-       |              WHERE doc_id % $sampleMod = 0) t0) t1),
+       |${sampledShinglesSql(sampleMod)}),
        |shh AS (
        |  SELECT doc_id,
        |    CAST('0x' || substring(md5(sh), 1, 15) AS BIGINT) AS h
        |  FROM sh),
        |sizes AS (SELECT doc_id, COUNT(*) AS n FROM shh GROUP BY 1),
-       |mins AS (
-       |  SELECT doc_id, seed,
-       |    MIN(CAST('0x' || substring(md5(seed || ':' || sh), 1, 15) AS BIGINT)) AS mh
-       |  FROM sh CROSS JOIN (SELECT UNNEST(range(0, $numHashes)) AS seed) s
-       |  GROUP BY 1, 2),
-       |bands AS (
-       |  SELECT doc_id, seed // $rowsPerBand AS band,
-       |    LIST(mh ORDER BY seed) AS bsig
-       |  FROM mins GROUP BY 1, 2),
+       |${sigCtes("", "sh", "doc_id", numHashes, bands)},
        |cands AS (
        |  SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
        |  FROM bands a JOIN bands b
@@ -696,7 +646,6 @@ object Dedup {
        |  CASE WHEN c12 >= c21 THEN '1_in_2' ELSE '2_in_1' END AS direction
        |FROM scored WHERE GREATEST(c12, c21) >= $tau
        |ORDER BY d1, d2""".stripMargin
-  }
 
   /** Per-doc shingle-hash frame (doc_id, h) — the narrow exact-verify
     * input shared by the containment paths and persisted by
@@ -705,23 +654,19 @@ object Dedup {
   private def shingleHashFrame(docs: DataFrame): DataFrame =
     shingles(docs).select(col("doc_id"), expr(shingleHashExpr).as("h"))
 
-  /** Per-chunk banded md5 minhash signatures (doc_id, band, bsig) over
-    * a deterministic 1-in-`sampleMod` document sample — the container
-    * index of [[containmentChunkLshMd5]], factored out so the one-shot
-    * path and the persisted store ([[writeContainmentStore]] /
-    * [[appendToContainmentStore]]) build the IDENTICAL frame. Chunks
-    * are sliding word windows of `chunkWords` every `stride` (the
-    * [[CorpusPipeline.chunkDocuments]] window rule); signatures are
-    * pre-explode-checkpointed (r9 convention) and band rows derived
-    * lazily.
+  /** Per-chunk shingle units (doc_id, chunk, sh) of the sample — the
+    * [[bandedSigs]] input of the container index of
+    * [[containmentChunkLshMd5]], shared by the one-shot path and the
+    * persisted store ([[writeContainmentStore]] /
+    * [[appendToContainmentStore]]) so both build the IDENTICAL frame.
+    * Chunks are sliding word windows of `chunkWords` every `stride`
+    * (the [[CorpusPipeline.chunkDocuments]] window rule); the
+    * per-(doc, chunk) shingle dedup is map-side (`array_distinct`, the
+    * [[shingles]] rule).
     */
-  private def chunkBandedMd5Sigs(docs: DataFrame, chunkWords: Int,
-      stride: Int, numHashes: Int, bands: Int,
-      sampleMod: Int): DataFrame = {
-    val rowsPerBand = numHashes / bands
-    val sample = widthSpread(
-      docs.filter(pmod(col("doc_id"), lit(sampleMod)) === 0))
-    val chunkSigs = sample
+  private def chunkShingles(docs: DataFrame, chunkWords: Int,
+      stride: Int, sampleMod: Int): DataFrame =
+    widthSpread(sampled(docs, sampleMod))
       .select(col("doc_id"), TextFunctions.words(col("text")).as("ws"))
       .where(size(col("ws")) > 0)
       .select(col("doc_id"), posexplode(expr(
@@ -730,27 +675,17 @@ object Dedup {
            |  ci -> slice(ws, ci * $stride + 1, $chunkWords))""".stripMargin)))
       .withColumnRenamed("pos", "chunk")
       .withColumnRenamed("col", "ws")
-      // r19: per-(doc, chunk) shingle dedup map-side (array_distinct,
-      // the [[shingles]] rule) — the old explode→distinct() exchange
-      // bought nothing a per-row hash set doesn't
       .select(col("doc_id"), col("chunk"),
         explode(array_distinct(expr(shingleArrExpr))).as("sh"))
-      .select(col("doc_id"), col("chunk"), col("sh"),
-        explode(expr(s"sequence(0, ${numHashes - 1})")).as("seed"))
-      .withColumn("h", expr(
-        "md5_prefix60(concat(CAST(seed AS STRING), ':', sh))"))
-      .groupBy("doc_id", "chunk", "seed").agg(min(col("h")).as("mh"))
-      .groupBy("doc_id", "chunk")
-      .agg(expr("transform(array_sort(collect_list(struct(seed, mh))), x -> x.mh)")
-        .as("sig"))
-      .localCheckpoint()
-    chunkSigs
-      .select(col("doc_id"), posexplode(expr(
-        s"transform(sequence(0, ${bands - 1}), b -> slice(sig, b*$rowsPerBand + 1, $rowsPerBand))")))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "bsig")
+
+  /** Distinct per-chunk band buckets (doc_id, band, bsig) — the
+    * container index.
+    */
+  private def chunkBandedSigs(docs: DataFrame, chunkWords: Int,
+      stride: Int, numHashes: Int, bands: Int, sampleMod: Int): DataFrame =
+    bandedSigs(chunkShingles(docs, chunkWords, stride, sampleMod),
+        numHashes, bands)
       .select("doc_id", "band", "bsig").distinct()
-  }
 
   /** ASYMMETRIC containment via chunk-LSH — the recall closure for
     * the tiny-A-in-giant-B case that symmetric Jaccard banding
@@ -781,13 +716,13 @@ object Dedup {
       chunkWords: Int = 16, stride: Int = 8, numHashes: Int = 16,
       bands: Int = 4, sampleMod: Int = 2,
       bucketCap: Int = DefaultBucketCap): DataFrame = {
-    val sample = docs.filter(pmod(col("doc_id"), lit(sampleMod)) === 0)
+    val sample = sampled(docs, sampleMod)
     // SHORT side: whole-doc signatures from the shared front end
-    val whole = bandedMd5Sigs(docs, numHashes, bands, sampleMod)
+    val whole = bandedSigs(docShingles(docs, sampleMod), numHashes, bands)
       .select(col("doc_id").as("d1"), col("band"), col("bsig"))
     // LONG side: per-chunk banded signatures (shared with the
     // containment store so the two paths can never diverge)
-    val chunkBanded = chunkBandedMd5Sigs(docs, chunkWords, stride,
+    val chunkBanded = chunkBandedSigs(docs, chunkWords, stride,
       numHashes, bands, sampleMod)
     val guarded = truncateOverCapBuckets(chunkBanded, Seq("band", "bsig"),
       bucketCap)
@@ -815,7 +750,7 @@ object Dedup {
   }
 
   /** DuckDB oracle for [[containmentChunkLshMd5]] — whole-doc and
-    * per-chunk md5 minhash banding, asymmetric band join, exact
+    * per-chunk minhash banding, asymmetric band join, exact
     * directed containment on candidates.
     */
   def containmentChunkLshMd5Sql(tau: Double = 0.5, chunkWords: Int = 16,
@@ -847,8 +782,6 @@ object Dedup {
   private def containmentChunkSql(tau: Double, chunkWords: Int,
       stride: Int, numHashes: Int, bands: Int, sampleMod: Int,
       wholePred: String, chunkPred: String): String = {
-    val rowsPerBand = numHashes / bands
-    val wWhere = if (wholePred.isEmpty) "" else s" WHERE $wholePred"
     val cAnd = if (chunkPred.isEmpty) "" else s" AND $chunkPred"
     s"""WITH docs_s AS (
        |  SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS ws
@@ -864,15 +797,7 @@ object Dedup {
        |    CAST('0x' || substring(md5(sh), 1, 15) AS BIGINT) AS h
        |  FROM sh),
        |sizes AS (SELECT doc_id, COUNT(*) AS n FROM shh GROUP BY 1),
-       |wmins AS (
-       |  SELECT doc_id, seed,
-       |    MIN(CAST('0x' || substring(md5(seed || ':' || sh), 1, 15) AS BIGINT)) AS mh
-       |  FROM sh CROSS JOIN (SELECT UNNEST(range(0, $numHashes)) AS seed) s$wWhere
-       |  GROUP BY 1, 2),
-       |wbands AS (
-       |  SELECT doc_id, seed // $rowsPerBand AS band,
-       |    LIST(mh ORDER BY seed) AS bsig
-       |  FROM wmins GROUP BY 1, 2),
+       |${sigCtes("w", "sh", "doc_id", numHashes, bands, wholePred)},
        |ch AS (
        |  SELECT doc_id, ci,
        |    ws[ci * $stride + 1 : ci * $stride + $chunkWords] AS cws
@@ -886,16 +811,7 @@ object Dedup {
        |  FROM (SELECT doc_id, ci, cws,
        |          UNNEST(range(1, greatest(len(cws) - 3, 0) + 2)) AS j
        |        FROM ch) t),
-       |cmins AS (
-       |  SELECT doc_id, ci, seed,
-       |    MIN(CAST('0x' || substring(md5(seed || ':' || sh), 1, 15) AS BIGINT)) AS mh
-       |  FROM csh CROSS JOIN (SELECT UNNEST(range(0, $numHashes)) AS seed) s
-       |  GROUP BY 1, 2, 3),
-       |cbands AS (
-       |  SELECT DISTINCT doc_id, band, bsig FROM (
-       |    SELECT doc_id, ci, seed // $rowsPerBand AS band,
-       |      LIST(mh ORDER BY seed) AS bsig
-       |    FROM cmins GROUP BY 1, 2, 3) t),
+       |${sigCtes("c", "csh", "doc_id, ci", numHashes, bands)},
        |cands AS (
        |  SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
        |  FROM wbands a JOIN cbands b
@@ -950,14 +866,12 @@ object Dedup {
   private def writeContainmentBatch(docs: DataFrame, root: String,
       tag: String, chunkWords: Int, stride: Int, numHashes: Int,
       bands: Int, sampleMod: Int): Unit = {
-    val sample = docs.filter(pmod(col("doc_id"), lit(sampleMod)) === 0)
     // one shingle pass feeds both the hash frame and the sizes
-    val sh = shingleHashFrame(sample).localCheckpoint()
+    val sh = shingleHashFrame(sampled(docs, sampleMod)).localCheckpoint()
     sh.write.mode("overwrite").parquet(s"$root/shingles/batch=$tag")
     sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
       .write.mode("overwrite").parquet(s"$root/sizes/batch=$tag")
-    chunkBandedMd5Sigs(docs, chunkWords, stride, numHashes, bands,
-        sampleMod)
+    chunkBandedSigs(docs, chunkWords, stride, numHashes, bands, sampleMod)
       .write.mode("overwrite").partitionBy("band")
       .parquet(s"$root/chunks/batch=$tag")
   }
@@ -1081,7 +995,7 @@ object Dedup {
       return Seq.empty[(Long, Long, Long, Long, Long, Double)]
         .toDF("d1", "d2", "n1", "n2", "common", "containment")
     }
-    val whole = bandedMd5Sigs(delta, numHashes, bands, sampleMod)
+    val whole = bandedSigs(docShingles(delta, sampleMod), numHashes, bands)
       .select(col("doc_id").as("d1"), col("band"), col("bsig"))
     val baseChunks = spark.read.parquet(s"$storePath/chunks")
       .select("doc_id", "band", "bsig")
@@ -1092,8 +1006,7 @@ object Dedup {
         col("bsig")), Seq("band", "bsig"))
       .filter(col("d1") =!= col("d2"))
       .select("d1", "d2").distinct()
-    val sample = delta.filter(pmod(col("doc_id"), lit(sampleMod)) === 0)
-    val sh1 = shingleHashFrame(sample).localCheckpoint()
+    val sh1 = shingleHashFrame(sampled(delta, sampleMod)).localCheckpoint()
     val n1s = sh1.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val sh2 = spark.read.parquet(s"$storePath/shingles")
       .select("doc_id", "h")
@@ -1234,7 +1147,7 @@ object Dedup {
       "doc_id", Seq("doc_id", "text"))
     val path = s"/tmp/graft_ctstore_${tag}_${fp.tag}_" +
       s"${chunkWords}w${stride}s${numHashes}x${bands}" +
-      s"m$sampleMod"
+      s"m${sampleMod}_$SigFamily"
     val fs = org.apache.hadoop.fs.FileSystem.get(
       baseDocs.sparkSession.sparkContext.hadoopConfiguration)
     if (!isCompleteSignatureStore(fs, path))
@@ -1300,16 +1213,16 @@ object Dedup {
     * scoring, then one verdict row PER DELTA DOC (n_dups=0 rows
     * included — the keep-list a pipeline actually consumes).
     */
-  private def incrementalReport(banded: DataFrame, keyCol: String,
-      deltaDocs: DataFrame, deltaMod: Int, numHashes: Int,
-      minEstSim: Double, bucketCap: Int = DefaultBucketCap): DataFrame = {
+  private def incrementalReport(banded: DataFrame,
+      deltaDocs: DataFrame, deltaMod: Int, minEstSim: Double,
+      bucketCap: Int = DefaultBucketCap): DataFrame = {
     val isDelta = pmod(col("doc_id"), lit(deltaMod)) === 0
     incrementalReportSplit(banded.filter(isDelta), banded.filter(!isDelta),
-      keyCol, deltaDocs.filter(isDelta), numHashes, minEstSim, bucketCap)
+      deltaDocs.filter(isDelta), minEstSim, bucketCap)
   }
 
   /** Candidate-pair core of the asymmetric delta-vs-base probe: banded
-    * delta signatures joined against base signatures on (band, key),
+    * delta signatures joined against base signatures on (band, bsig),
     * per-collision MinHash scoring, deduped to one `(dd, db, est_sim)`
     * row per pair at `est_sim >= minEstSim`. Shared by the per-doc
     * verdict report ([[incrementalReportSplit]]) and the incremental
@@ -1329,20 +1242,16 @@ object Dedup {
     * anti-join untouched.
     */
   private def deltaBasePairSims(d: DataFrame, b: DataFrame,
-      keyCol: String, numHashes: Int, minEstSim: Double,
-      bucketCap: Int): DataFrame = {
-    val bG = truncateOverCapBuckets(b, Seq("band", keyCol), bucketCap)
+      minEstSim: Double, bucketCap: Int): DataFrame = {
+    val bG = truncateOverCapBuckets(b, Seq("band", "bsig"), bucketCap)
     // shuffle_hash on both joins: sorting band buckets (or the final
     // verdict assembly) for a merge join is pure waste before hash
     // lookups, and it keeps the suite's zero-SMJ invariant at any size
     d.as("a").hint("shuffle_hash")
       .join(bG.as("b"),
-        col("a.band") === col("b.band") &&
-          col(s"a.$keyCol") === col(s"b.$keyCol"))
+        col("a.band") === col("b.band") && col("a.bsig") === col("b.bsig"))
       .select(col("a.doc_id").as("dd"), col("b.doc_id").as("db"),
-        expr(s"""CAST(aggregate(zip_with(a.sig, b.sig, (x, y) -> IF(x = y, 1, 0)),
-           |     0, (acc, v) -> acc + v) AS DOUBLE) / $numHashes""".stripMargin)
-          .as("est_sim"))
+        estSim.as("est_sim"))
       .groupBy("dd", "db").agg(first("est_sim").as("est_sim"))
       .filter(col("est_sim") >= minEstSim)
   }
@@ -1352,10 +1261,9 @@ object Dedup {
     * where the base side is READ from parquet, never recomputed.
     */
   private def incrementalReportSplit(d: DataFrame, b: DataFrame,
-      keyCol: String, deltaDocs: DataFrame, numHashes: Int,
-      minEstSim: Double, bucketCap: Int = DefaultBucketCap): DataFrame = {
-    val sims = deltaBasePairSims(d, b, keyCol, numHashes, minEstSim,
-      bucketCap)
+      deltaDocs: DataFrame, minEstSim: Double,
+      bucketCap: Int = DefaultBucketCap): DataFrame = {
+    val sims = deltaBasePairSims(d, b, minEstSim, bucketCap)
     val agg = sims.groupBy("dd")
       .agg(count(lit(1)).as("n_dups"),
         max("est_sim").as("best_sim"),
@@ -1380,10 +1288,11 @@ object Dedup {
     * the stored base signatures — at 100 TB the base side is the
     * persisted signature store (amortized across batches), never
     * recomputed, and cost per batch is independent of N except
-    * through bucket occupancy. Output: one verdict row per delta doc
-    * (dup count, best base match, estimated similarity).
-    * xxhash64 family → rows-only check; [[incrementalLshMd5]] is the
-    * oracle-checked portable twin.
+    * through bucket occupancy. Output: one verdict row per sampled
+    * delta doc (dup count, best base match, estimated similarity).
+    * Same [[bandedSigs]] family and 1-in-`sampleMod` sample as
+    * [[minHashLsh]]; oracle [[incrementalLshSql]] (the `_md5` entries
+    * are the 16×4, 1-in-2 preset).
     * CONSTRUCTING this frame is eager — signature checkpoint + the
     * asymmetric occupancy-guard count run as jobs (the
     * [[guardedSelfJoinPairs]] convention); so for every
@@ -1391,46 +1300,18 @@ object Dedup {
     */
   def incrementalLsh(docs: DataFrame, deltaMod: Int = 3,
       numHashes: Int = 64, bands: Int = 16, minEstSim: Double = 0.5,
-      bucketCap: Int = DefaultBucketCap): DataFrame =
-    incrementalReport(bandedXxSigs(docs, numHashes, bands), "band_hash",
-      docs, deltaMod, numHashes, minEstSim, bucketCap)
+      sampleMod: Int = 1, bucketCap: Int = DefaultBucketCap): DataFrame =
+    incrementalReport(
+      bandedSigs(docShingles(docs, sampleMod), numHashes, bands),
+      sampled(docs, sampleMod), deltaMod, minEstSim, bucketCap)
 
-  /** [[incrementalLsh]] with the md5-portable hash family (16×4
-    * signatures over a 1-in-`sampleMod` sample — the capped-budget
-    * twin convention): fully DuckDB-oracle-checkable, proving the
-    * asymmetric delta/base banding, scoring and verdict assembly
-    * bit-for-bit.
-    */
-  def incrementalLshMd5(docs: DataFrame, deltaMod: Int = 3,
-      numHashes: Int = 16, bands: Int = 4, minEstSim: Double = 0.5,
-      sampleMod: Int = 2, bucketCap: Int = DefaultBucketCap): DataFrame =
-    incrementalReport(bandedMd5Sigs(docs, numHashes, bands, sampleMod),
-      "bsig", docs.filter(pmod(col("doc_id"), lit(sampleMod)) === 0),
-      deltaMod, numHashes, minEstSim, bucketCap)
-
-  /** DuckDB oracle for [[incrementalLshMd5]]. */
-  def incrementalLshMd5Sql(deltaMod: Int = 3, numHashes: Int = 16,
-      bands: Int = 4, minEstSim: Double = 0.5,
-      sampleMod: Int = 2): String = {
-    val rowsPerBand = numHashes / bands
+  /** DuckDB oracle for [[incrementalLsh]]. */
+  def incrementalLshSql(deltaMod: Int = 3, numHashes: Int = 64,
+      bands: Int = 16, minEstSim: Double = 0.5,
+      sampleMod: Int = 1): String =
     s"""WITH sh AS (
-       |  SELECT DISTINCT doc_id,
-       |    concat_ws(' ', arr[j], arr[j + 1], arr[j + 2]) AS sh
-       |  FROM (SELECT doc_id, arr,
-       |          UNNEST(range(1, greatest(len(arr) - 3, 0) + 2)) AS j
-       |        FROM (SELECT doc_id,
-       |                regexp_split_to_array(trim(text), '\\s+') AS arr
-       |              FROM documents
-       |              WHERE doc_id % $sampleMod = 0) t0) t1),
-       |mins AS (
-       |  SELECT doc_id, seed,
-       |    MIN(CAST('0x' || substring(md5(seed || ':' || sh), 1, 15) AS BIGINT)) AS mh
-       |  FROM sh CROSS JOIN (SELECT UNNEST(range(0, $numHashes)) AS seed) s
-       |  GROUP BY 1, 2),
-       |bands AS (
-       |  SELECT doc_id, seed // $rowsPerBand AS band,
-       |    LIST(mh ORDER BY seed) AS bsig
-       |  FROM mins GROUP BY 1, 2),
+       |${sampledShinglesSql(sampleMod)}),
+       |${sigCtes("", "sh", "doc_id", numHashes, bands)},
        |cands AS (
        |  SELECT DISTINCT a.doc_id AS dd, b.doc_id AS db
        |  FROM bands a JOIN bands b ON a.band = b.band AND a.bsig = b.bsig
@@ -1461,7 +1342,6 @@ object Dedup {
        |      WHERE doc_id % $sampleMod = 0 AND doc_id % $deltaMod = 0) d
        |LEFT JOIN agg ON agg.dd = d.doc_id
        |ORDER BY doc_id""".stripMargin
-  }
 
   /** Persist the base corpus's banded MinHash signature store — the
     * durable artifact a production ingest pipeline keeps BETWEEN
@@ -1482,7 +1362,7 @@ object Dedup {
     val tmp = new org.apache.hadoop.fs.Path(path + ".inprogress")
     fs.delete(tmp, true)
     graft.sources.PartitionedSink.writePartitioned(
-      bandedMd5Sigs(baseDocs, numHashes, bands, sampleMod),
+      bandedSigs(docShingles(baseDocs, sampleMod), numHashes, bands),
       tmp.toString, Seq("band"))
     // Bloom sidecar rides inside the temp dir, so the rename publishes
     // store + filter together (a store is never visible bloom-less)
@@ -1556,7 +1436,7 @@ object Dedup {
       path: String): DataFrame =
     graft.sources.PartitionedSink.read(spark, path)
 
-  /** [[incrementalLshMd5]] against a PERSISTED base signature store —
+  /** [[incrementalLsh]] against a PERSISTED base signature store —
     * the real production ingestion shape: the base side is READ from
     * [[writeSignatureStore]] output, never recomputed, and each batch
     * computes only its OWN signatures before the asymmetric band join.
@@ -1564,8 +1444,8 @@ object Dedup {
     * independent of how large the base corpus has grown (the store
     * scan is a column-pruned parquet read, no shingling or md5 work).
     * With base/delta carved from one corpus by `doc_id % deltaMod`,
-    * the output is bit-identical to [[incrementalLshMd5]] on the
-    * combined frame, so [[incrementalLshMd5Sql]] doubles as this
+    * the output is bit-identical to [[incrementalLsh]] on the
+    * combined frame, so [[incrementalLshSql]] doubles as this
     * path's oracle — proving store round-trip + split-frame banding
     * changes nothing.
     */
@@ -1576,9 +1456,8 @@ object Dedup {
     val base = readSignatureStore(spark, storePath)
       .select("doc_id", "sig", "band", "bsig")
     incrementalReportSplit(
-      bandedMd5Sigs(delta, numHashes, bands, sampleMod), base, "bsig",
-      delta.filter(pmod(col("doc_id"), lit(sampleMod)) === 0),
-      numHashes, minEstSim, bucketCap)
+      bandedSigs(docShingles(delta, sampleMod), numHashes, bands), base,
+      sampled(delta, sampleMod), minEstSim, bucketCap)
   }
 
   /** Fold a processed delta INTO the signature store — the second half
@@ -1611,7 +1490,7 @@ object Dedup {
     val tag = tagOpt.get
     val marker = new org.apache.hadoop.fs.Path(path, s"_applied/$tag")
     if (appendFs.exists(marker)) return // replayed batch
-    val sigs = bandedMd5Sigs(deltaDocs, numHashes, bands, sampleMod)
+    val sigs = bandedSigs(docShingles(deltaDocs, sampleMod), numHashes, bands)
     // fold the batch's bucket keys into the Bloom sidecar BEFORE the
     // parquet append: the sidecar and the band dirs can't move in one
     // atomic step, and the two crash orderings are not symmetric — a
@@ -1709,7 +1588,7 @@ object Dedup {
     val fp = StoreSwap.contentFp(baseDocs, "ensureSignatureStore",
       "doc_id", Seq("doc_id", "text"))
     val path = s"/tmp/graft_sigstore_${tag}_${fp.tag}_" +
-      s"${numHashes}x${bands}m$sampleMod"
+      s"${numHashes}x${bands}m${sampleMod}_$SigFamily"
     val fs = org.apache.hadoop.fs.FileSystem.get(
       baseDocs.sparkSession.sparkContext.hadoopConfiguration)
     if (!isCompleteSignatureStore(fs, path))
@@ -1908,7 +1787,7 @@ object Dedup {
     * shrinks to true collisions + the fpp stragglers. Verdict rows are
     * still emitted for EVERY sampled delta doc (the gate prunes join
     * inputs, not report rows), so the output is bit-identical to the
-    * ungated path and [[incrementalLshMd5Sql]] remains its oracle. At
+    * ungated path and [[incrementalLshSql]] remains its oracle. At
     * 100 TB this is the difference between shuffling every new batch's
     * full band set against the store and shuffling only the (rare)
     * suspected-duplicate slice.
@@ -1926,11 +1805,10 @@ object Dedup {
       .select("doc_id", "sig", "band", "bsig")
     // per-band shard probe (no coalesce guard: the probe never
     // returns null — XxHash64 folds a null key into the seed)
-    val gated = bandedMd5Sigs(delta, numHashes, bands, sampleMod)
+    val gated = bandedSigs(docShingles(delta, sampleMod), numHashes, bands)
       .filter(shardProbe(bloom))
-    incrementalReportSplit(gated, base, "bsig",
-      delta.filter(pmod(col("doc_id"), lit(sampleMod)) === 0),
-      numHashes, minEstSim, bucketCap)
+    incrementalReportSplit(gated, base, sampled(delta, sampleMod),
+      minEstSim, bucketCap)
   }
 
   /** Bloom-gated EXACT incremental dedup — the fingerprint-level
@@ -2029,7 +1907,7 @@ object Dedup {
   def simHashPairs(docs: DataFrame, maxHamming: Int = 3,
       bucketCap: Int = DefaultBucketCap): DataFrame = {
     // materialized once pre-explode (same checkpoint discipline as
-    // [[bandedXxSigs]]) — the self-join would replay the simhash
+    // [[bandedSigs]]) — the self-join would replay the simhash
     // aggregation per side; the 4-chunk explode is derived lazily
     val hashes = docSimHashes(docs).localCheckpoint()
     val banded = hashes.select(col("doc_id"), col("simhash"),
@@ -2055,8 +1933,8 @@ object Dedup {
     * DuckDB-oracle-checkable, the hard evidence for the SimHash
     * banding pipeline; the one-pass `SimHash64` aggregate stays the
     * bench path. Verification-artifact budget: runs on a
-    * deterministic 1-in-`sampleMod` document sample (like
-    * [[minHashLshMd5]] — the pipeline proof doesn't need the corpus).
+    * deterministic 1-in-`sampleMod` document sample (the pipeline
+    * proof doesn't need the corpus).
     */
   def simHashPairsMd5(docs: DataFrame, maxHamming: Int = 3,
       sampleMod: Int = 2): DataFrame = {
@@ -2424,25 +2302,25 @@ object Dedup {
   }
 
   /** [[clusters]] with the 100 TB edge source: MinHash-LSH candidate
-    * pairs instead of the exact all-pairs index — the md5-portable LSH
-    * variant, so the ENTIRE production dedup path (shingle → minhash →
+    * pairs instead of the exact all-pairs index — the [[minHashLsh]]
+    * 16×4 preset, so the ENTIRE production dedup path (shingle → minhash →
     * band → candidate → component → canonical id) is DuckDB-checkable
-    * bit-for-bit. Nodes are the twin's 1-in-`sampleMod` document
+    * bit-for-bit. Nodes are the 1-in-`sampleMod` document
     * sample, so unsampled docs don't appear as spurious singletons.
     */
   def clustersLshMd5(docs: DataFrame, sampleMod: Int = 2): DataFrame = {
     // collision rows, not deduped pairs: connectedComponents
     // canonicalizes + distincts the edge set anyway, so the pair-level
-    // groupBy inside minHashLshMd5 was a redundant second dedup
+    // groupBy inside minHashLsh would be a redundant second dedup
     // exchange on the same keys (r18)
-    val edges = minHashLshMd5Collisions(docs, sampleMod = sampleMod)
+    val edges = lshCollisions(bandedSigs(docShingles(docs, sampleMod),
+        numHashes = 16, bands = 4), 0.5, DefaultBucketCap)
       .select("d1", "d2")
-    val nodes = docs.filter(pmod(col("doc_id"), lit(sampleMod)) === 0)
-      .select(col("doc_id").as("node"))
+    val nodes = sampled(docs, sampleMod).select(col("doc_id").as("node"))
     clusterize(edges, nodes)
   }
 
-  /** DuckDB oracle for [[clustersLshMd5]] — the md5-LSH pair SQL as a
+  /** DuckDB oracle for [[clustersLshMd5]] — the LSH pair SQL as a
     * CTE feeding the same recursive-closure component formulation.
     */
   def clustersLshMd5Sql(sampleMod: Int = 2): String =
@@ -2520,14 +2398,14 @@ object Dedup {
        |WHERE c.cluster_size > 1
        |GROUP BY 1, 2 ORDER BY 1""".stripMargin
 
-  /** CTE chain md5-LSH candidates → recursive components → `lbl`
+  /** CTE chain LSH candidates → recursive components → `lbl`
     * (doc_id, cluster_id) + `csize` — shared by [[clustersLshMd5Sql]]
     * and [[keepBestSql]] so the component formulation can never
     * diverge between the two oracles. Must follow `WITH RECURSIVE`.
     */
   private[operators] def clusterLshLblCtes(sampleMod: Int): String =
     s"""cand AS (
-       |${minHashLshMd5Sql(sampleMod = sampleMod, ordered = false)}),
+       |${minHashLshSql(16, 4, sampleMod = sampleMod, ordered = false)}),
        |nodes AS (SELECT doc_id FROM documents WHERE doc_id % $sampleMod = 0),
        |sym AS (SELECT d1 AS src, d2 AS dst FROM cand
        |        UNION ALL SELECT d2, d1 FROM cand),
@@ -2902,18 +2780,14 @@ object Dedup {
       if (existing.isEmpty) storedRaw else storedRaw.localCheckpoint()
     val base = readSignatureStore(spark, storePath)
       .select("doc_id", "sig", "band", "bsig")
-    val dBanded = bandedMd5Sigs(deltaDocs, numHashes, bands, sampleMod)
+    val dBanded = bandedSigs(docShingles(deltaDocs, sampleMod), numHashes,
+      bands)
     // delta-delta: the fresh path's own guarded self-join, delta-only
-    val ddPairs = guardedSelfJoinPairs(dBanded, Seq("band", "bsig"),
-        bucketCap)(
-        expr(s"""CAST(aggregate(zip_with(a.sig, b.sig, (x, y) -> IF(x = y, 1, 0)),
-           |     0, (acc, v) -> acc + v) AS DOUBLE) / $numHashes""".stripMargin),
-        "est_sim")
-      .groupBy("d1", "d2").agg(first("est_sim").as("est_sim"))
-      .filter(col("est_sim") >= minEstSim).select("d1", "d2")
+    // (collision rows — the CC loop canonicalizes the edge set anyway)
+    val ddPairs = lshCollisions(dBanded, minEstSim, bucketCap)
+      .select("d1", "d2")
     // delta-base: pair-level store probe (shared with the verdict path)
-    val dbPairs = deltaBasePairSims(dBanded, base, "bsig", numHashes,
-        minEstSim, bucketCap)
+    val dbPairs = deltaBasePairSims(dBanded, base, minEstSim, bucketCap)
       .select(col("dd").as("d1"), col("db").as("d2"))
     // eager: shared by the touched-component lookup and the CC loop
     val deltaEdges = ddPairs.unionAll(dbPairs).localCheckpoint()
@@ -2928,8 +2802,7 @@ object Dedup {
     val members = stored.join(touchedKeyed, Seq("cluster_id"), "left_semi")
     val starEdges = members.filter(col("doc_id") =!= col("cluster_id"))
       .select(col("doc_id").as("d1"), col("cluster_id").as("d2"))
-    val nodes = deltaDocs
-      .filter(pmod(col("doc_id"), lit(sampleMod)) === 0)
+    val nodes = sampled(deltaDocs, sampleMod)
       .select(col("doc_id").as("node"))
       .unionAll(members.select(col("doc_id").as("node")))
     // overlay publish: ONLY the rebuilt rows (touched members + delta
@@ -2977,7 +2850,8 @@ object Dedup {
       sampleMod: Int = 2): String = {
     val fp = StoreSwap.contentFp(docs, "ensureClusterMap",
       "doc_id", Seq("doc_id", "text"))
-    val path = s"/tmp/graft_clustermap_${tag}_${fp.tag}_m$sampleMod"
+    val path =
+      s"/tmp/graft_clustermap_${tag}_${fp.tag}_m${sampleMod}_$SigFamily"
     val fs = org.apache.hadoop.fs.FileSystem.get(
       docs.sparkSession.sparkContext.hadoopConfiguration)
     if (!isCompleteSignatureStore(fs, path))
@@ -2998,7 +2872,8 @@ object Dedup {
       sampleMod: Int = 2): String = {
     val fp = StoreSwap.contentFp(docs, "ensureAppendedClusterMap",
       "doc_id", Seq("doc_id", "text"))
-    val path = s"/tmp/graft_clustermap_app_${tag}_${fp.tag}_m$sampleMod"
+    val path =
+      s"/tmp/graft_clustermap_app_${tag}_${fp.tag}_m${sampleMod}_$SigFamily"
     val fs = org.apache.hadoop.fs.FileSystem.get(
       docs.sparkSession.sparkContext.hadoopConfiguration)
     if (!isCompleteSignatureStore(fs, path)) {
@@ -4207,7 +4082,7 @@ object Dedup {
   // Estimator evaluation: LSH candidates vs exact-Jaccard truth
   // ---------------------------------------------------------------
 
-  /** Precision/recall of the [[minHashLshMd5]] near-dup detector
+  /** Precision/recall of the [[minHashLsh]] near-dup detector
     * against exact shingle-Jaccard ground truth — the calibration step
     * a pipeline runs before trusting an LSH configuration at corpus
     * scale: sweep (numHashes, bands, tau) on a sample, read this one
@@ -4232,7 +4107,7 @@ object Dedup {
     */
   def lshEval(docs: DataFrame, tau: Double = 0.5, numHashes: Int = 16,
       bands: Int = 4, sampleMod: Int = 2): DataFrame = {
-    val cand = minHashLshMd5(docs, numHashes, bands, minEstSim = tau,
+    val cand = minHashLsh(docs, numHashes, bands, minEstSim = tau,
         sampleMod = sampleMod)
       .select("d1", "d2").withColumn("c", lit(1L))
     // r19: the truth-side inverted-index self-join keys on the house
@@ -4243,9 +4118,7 @@ object Dedup {
     // absent 60-bit collisions, which the string-keyed DuckDB oracle
     // certifies against at every SF). Checkpointed once: three
     // consumers (sizes + both self-join sides).
-    val sh = shingleHashFrame(
-      docs.filter(pmod(col("doc_id"), lit(sampleMod)) === 0))
-      .localCheckpoint()
+    val sh = shingleHashFrame(sampled(docs, sampleMod)).localCheckpoint()
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val truth = sh.as("a").hint("shuffle_hash")
       .join(sh.as("b"),
@@ -4279,7 +4152,7 @@ object Dedup {
           .as("recall"))
   }
 
-  /** DuckDB oracle for [[lshEval]]: the [[minHashLshMd5Sql]] candidate
+  /** DuckDB oracle for [[lshEval]]: the [[minHashLshSql]] candidate
     * CTE against an exact shingle-Jaccard truth CTE (same 3-gram
     * shingle fragment as the minhash side), confusion counts via the
     * same full-outer join.
@@ -4287,17 +4160,10 @@ object Dedup {
   def lshEvalSql(tau: Double = 0.5, numHashes: Int = 16, bands: Int = 4,
       sampleMod: Int = 2): String =
     s"""WITH cand AS (
-       |${minHashLshMd5Sql(numHashes, bands, minEstSim = tau,
+       |${minHashLshSql(numHashes, bands, minEstSim = tau,
           sampleMod = sampleMod, ordered = false)}),
        |sh2 AS (
-       |  SELECT DISTINCT doc_id,
-       |    concat_ws(' ', arr[j], arr[j + 1], arr[j + 2]) AS sh
-       |  FROM (SELECT doc_id, arr,
-       |          UNNEST(range(1, greatest(len(arr) - 3, 0) + 2)) AS j
-       |        FROM (SELECT doc_id,
-       |                regexp_split_to_array(trim(text), '\\s+') AS arr
-       |              FROM documents
-       |              WHERE doc_id % $sampleMod = 0) t0) t1),
+       |${sampledShinglesSql(sampleMod)}),
        |szs AS (SELECT doc_id, COUNT(*) AS n FROM sh2 GROUP BY 1),
        |tpairs AS (
        |  SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS common

@@ -106,9 +106,10 @@ object IngestLoop {
     // is WIDE-keyed (the r17 default flip — a stored value's
     // derivation changed, so the ensure path must bump or stale
     // narrow-key roots would serve a width the census oracle no
-    // longer expects)
-    val root =
-      s"/tmp/graft_ingestloop_${tag}_${fp.tag}_m${sampleMod}s${shards}_ixw"
+    // longer expects); the MinHash family tag rebuilds roots whose
+    // signature store and cluster map predate the current family
+    val root = s"/tmp/graft_ingestloop_${tag}_${fp.tag}_m${sampleMod}" +
+      s"s${shards}_ixw_${Dedup.SigFamily}"
     val fs = org.apache.hadoop.fs.FileSystem.get(
       docs.sparkSession.sparkContext.hadoopConfiguration)
     if (!Dedup.isCompleteSignatureStore(fs, root)) {

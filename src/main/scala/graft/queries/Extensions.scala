@@ -7,8 +7,8 @@ import graft.operators._
 /** Training-data-pipeline extension queries (builder brief): dedup,
   * similarity search, text analysis, time windows, set ops, multimodal
   * plumbing. Each SQL-expressible operator carries a DuckDB oracle;
-  * hash-based ops (minhash/simhash/ANN — engine-specific hash
-  * functions) and the multimodal codec paths (real JDK decode/resize
+  * hash-based ops on engine-specific hash functions (simhash/ANN) and
+  * the multimodal codec paths (real JDK decode/resize
   * DuckDB cannot mirror) are declared without oracles → the driver
   * records a rows-only check, and ScalaTest covers their semantics.
   */
@@ -544,7 +544,9 @@ object Extensions {
         Dedup.readClusterMap(c.spark, map))
     }),
     "dedup_minhash_lsh" -> (c => Dedup.minHashLsh(c.documents)),
-    "dedup_minhash_lsh_md5" -> (c => Dedup.minHashLshMd5(c.documents)),
+    // the 16×4, 1-in-2 preset of the one MinHash path
+    "dedup_minhash_lsh_md5" -> (c => Dedup.minHashLsh(c.documents,
+      numHashes = 16, bands = 4, sampleMod = 2)),
     "dedup_simhash_pairs" -> (c => Dedup.simHashPairs(c.documents)),
     "dedup_simhash_pairs_md5" -> (c => Dedup.simHashPairsMd5(c.documents)),
     "dedup_embedding_cosine" -> (c => Similarity.embeddingNearDups(c.embeddings)),
@@ -555,10 +557,11 @@ object Extensions {
       (c => Dedup.componentSizeHistogram(Dedup.clusters(c.documents))),
     "dedup_clusters_lsh_md5" -> (c => Dedup.clustersLshMd5(c.documents)),
     "dedup_incremental" -> (c => Dedup.incrementalLsh(c.documents)),
-    "dedup_incremental_md5" -> (c => Dedup.incrementalLshMd5(c.documents)),
+    "dedup_incremental_md5" -> (c => Dedup.incrementalLsh(c.documents,
+      numHashes = 16, bands = 4, sampleMod = 2)),
     // base signatures come from a PERSISTED parquet store (written
     // once per fixture, reused across invocations) — proves the
-    // store round-trip changes nothing vs the one-frame md5 twin
+    // store round-trip changes nothing vs the one-frame 16×4 preset
     "dedup_incremental_store" -> (c => {
       val base = c.documents.filter(pmod(col("doc_id"), lit(3)) =!= 0)
       val delta = c.documents.filter(pmod(col("doc_id"), lit(3)) === 0)
@@ -945,6 +948,10 @@ object Extensions {
     "multimodal_resize" ->
       (c => Multimodal.resizeQuery(c.spark, c.documents)))
 
+  /** Oracle of the 16×4, 1-in-2 incremental preset and its store paths. */
+  private val md5IncrementalSql =
+    Dedup.incrementalLshSql(numHashes = 16, bands = 4, sampleMod = 2)
+
   val oracles: Map[String, String] = Map(
     "probe_ln_grid6" -> lnProbeSql("1e6"),
     "probe_ln_grid9" -> lnProbeSql("1e9"),
@@ -973,18 +980,21 @@ object Extensions {
     "dedup_split_leakage" -> Dedup.splitLeakageSql(),
     // store round-trip must be invisible — same oracle as the one-shot
     "dedup_split_leakage_store" -> Dedup.splitLeakageSql(),
-    "dedup_minhash_lsh_md5" -> Dedup.minHashLshMd5Sql(),
+    "dedup_minhash_lsh" -> Dedup.minHashLshSql(),
+    "dedup_minhash_lsh_md5" ->
+      Dedup.minHashLshSql(numHashes = 16, bands = 4, sampleMod = 2),
     "dedup_simhash_pairs_md5" -> Dedup.simHashPairsMd5Sql(),
     "dedup_embedding_cosine" -> Similarity.embeddingNearDupsSql(),
     "dedup_clusters" -> Dedup.clustersSql(),
     "dedup_cluster_histogram" -> Dedup.clusterHistogramSql(),
     "dedup_clusters_lsh_md5" -> Dedup.clustersLshMd5Sql(),
-    "dedup_incremental_md5" -> Dedup.incrementalLshMd5Sql(),
-    // same oracle as the one-frame twin: base/delta split + parquet
+    "dedup_incremental" -> Dedup.incrementalLshSql(),
+    "dedup_incremental_md5" -> md5IncrementalSql,
+    // same oracle as the one-frame preset: base/delta split + parquet
     // round-trip must be invisible in the verdicts
-    "dedup_incremental_store" -> Dedup.incrementalLshMd5Sql(),
+    "dedup_incremental_store" -> md5IncrementalSql,
     // bloom gating prunes join INPUTS, never verdicts — same oracle
-    "dedup_incremental_store_bloom" -> Dedup.incrementalLshMd5Sql(),
+    "dedup_incremental_store_bloom" -> md5IncrementalSql,
     "dedup_incremental_bloom" -> Dedup.incrementalExactBloomSql(),
     "dedup_passages" -> Dedup.passageDedupSql(),
     "dedup_spans" -> Dedup.spanDedupSql(),

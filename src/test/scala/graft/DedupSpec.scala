@@ -15,6 +15,37 @@ class DedupSpec extends AnyFunSuite {
     (4L, "the quick brown fox jumps over the lazy cat") // near-dup of 0
   ).toDF("doc_id", "text")
 
+  /** [[docs]]' roles at a length where the 16×4 LSH preset's outcome
+    * is a property of the data, not of one hash draw: the near-dup 4
+    * shares 33 of its 34 shingles with 0 (J ≈ 0.94, so it misses all
+    * four 4-row bands with probability (1 − J⁴)⁴ ≈ 0.002 under any
+    * min-wise family), and the variant 2 keeps 0's first 11 words and
+    * capitalizes every third word after them, so it shares 9 of its 34
+    * shingles with 0, 1 and 4 (J = 9/59 ≈ 0.15: est_sim ≥ 0.5 and a
+    * 4-row band collision both have probability about 1e-3, so the
+    * precision and own-cluster checks on it can fail). The short
+    * [[docs]] pair sits at J = 0.75 (a 0.22 miss probability) and the
+    * variant at J = 0.4 — outcomes that belong to a particular draw.
+    * 0 and 4 end in one different word, so 0 still outscores 4
+    * exactly as in [[docs]] (the quality score is a per-word mean).
+    */
+  private def lshDocs = {
+    val body = "the quick brown fox jumps over the lazy dog and then the " +
+      "old farmer walks slowly down the long dusty road past the red " +
+      "barn while his tired horse waits near the gate for the"
+    val variant = s"$body dog".split(" ").zipWithIndex
+      .map { case (w, i) => if (i >= 11 && (i - 11) % 3 == 0) w.capitalize
+        else w }
+      .mkString("  ")
+    Seq(
+      (0L, s"$body dog"),
+      (1L, s"$body dog"), // exact dup of 0
+      (2L, variant), // case/ws variant of 0
+      (3L, "a completely different document about spark engines"),
+      (4L, s"$body cat") // near-dup of 0
+    ).toDF("doc_id", "text")
+  }
+
   test("containmentPairs flags the embedded doc that Jaccard misses") {
     val d = Seq(
       (0L, "alpha beta gamma"), // wholly contained in doc 10
@@ -338,7 +369,8 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("md5-portable minhash LSH finds the same dup structure") {
-    val pairs = Dedup.minHashLshMd5(docs, minEstSim = 0.4, sampleMod = 1)
+    val pairs = Dedup.minHashLsh(lshDocs, numHashes = 16, bands = 4,
+        minEstSim = 0.4, sampleMod = 1)
       .collect()
       .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     assert(pairs((0L, 1L)) == 1.0) // identical docs → full signature match
@@ -386,7 +418,8 @@ class DedupSpec extends AnyFunSuite {
     val other = Seq((100L, "a unique document about spark physical plans"),
       (101L, "another unique document about catalyst optimizer rules"))
     val df = (boiler ++ other).toDF("doc_id", "text")
-    val guarded = Dedup.minHashLshMd5(df, sampleMod = 1, bucketCap = 4)
+    val guarded = Dedup.minHashLsh(df, numHashes = 16, bands = 4,
+        sampleMod = 1, bucketCap = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     // linear star edges: exactly (0, m) for each of the 19 members —
     // NOT the C(20,2)=190 quadratic pair set
@@ -395,15 +428,17 @@ class DedupSpec extends AnyFunSuite {
       d1 == 0L && d2 >= 1L && d2 <= 19L && sim == 1.0 })
     // under-cap buckets are untouched: default cap reproduces the
     // full pair set bit-for-bit on the standard fixture
-    val base = Dedup.minHashLshMd5(docs, minEstSim = 0.4, sampleMod = 1)
+    val base = Dedup.minHashLsh(docs, numHashes = 16, bands = 4,
+        minEstSim = 0.4, sampleMod = 1)
       .collect().map(_.toString)
-    val capped200 = Dedup.minHashLshMd5(docs, minEstSim = 0.4,
-      sampleMod = 1, bucketCap = 200).collect().map(_.toString)
+    val capped200 = Dedup.minHashLsh(docs, numHashes = 16, bands = 4,
+      minEstSim = 0.4, sampleMod = 1, bucketCap = 200).collect().map(_.toString)
     assert(base.sameElements(capped200))
     // downstream connectivity is preserved: star edges still collapse
     // the whole mega-bucket into one component
     val lbl = graft.operators.Dedup.connectedComponents(
-        Dedup.minHashLshMd5(df, sampleMod = 1, bucketCap = 4)
+        Dedup.minHashLsh(df, numHashes = 16, bands = 4, sampleMod = 1,
+            bucketCap = 4)
           .select($"d1", $"d2"),
         df.select($"doc_id".as("node")))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -417,8 +452,8 @@ class DedupSpec extends AnyFunSuite {
     val df = (0 until 13)
       .map(i => (i.toLong, "standard legal footer text repeated verbatim"))
       .toDF("doc_id", "text")
-    val out = Dedup.incrementalLshMd5(df, deltaMod = 13, sampleMod = 1,
-        bucketCap = 4)
+    val out = Dedup.incrementalLsh(df, numHashes = 16, bands = 4,
+        deltaMod = 13, sampleMod = 1, bucketCap = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3)))
     assert(out.length == 1)
@@ -460,7 +495,8 @@ class DedupSpec extends AnyFunSuite {
     Dedup.writeSignatureStore(base, store, sampleMod = 1)
     val out = Dedup.incrementalLshStore(store, delta, sampleMod = 1)
       .collect().map(_.toString)
-    val twin = Dedup.incrementalLshMd5(docs, sampleMod = 1)
+    val twin = Dedup.incrementalLsh(docs, numHashes = 16, bands = 4,
+        sampleMod = 1)
       .collect().map(_.toString)
     assert(out.sameElements(twin),
       "persisted-store path diverged from the one-frame twin")
@@ -571,10 +607,10 @@ class DedupSpec extends AnyFunSuite {
 
   test("LSH-edged clustering clusters the sampled near-dups") {
     // sampleMod=2 keeps docs 0/2/4; 0 and 4 are near-dups (LSH pair),
-    // 2 differs case-wise (different shingles — own cluster)
+    // 2 differs case-wise (J≈0.15 with both — own cluster)
     // map output carries no total order (r12: the terminal orderBy
     // was dead weight — consumers aggregate, the driver sorts)
-    val out = Dedup.clustersLshMd5(docs).collect()
+    val out = Dedup.clustersLshMd5(lshDocs).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
     assert(out.map(_._1).toSeq == Seq(0L, 2L, 4L))
     val byId = out.map(t => t._1 -> t).toMap
@@ -604,7 +640,8 @@ class DedupSpec extends AnyFunSuite {
 
   test("incremental md5 twin produces the same verdict structure") {
     // sampleMod=1: no sampling, all 5 docs; delta = {0, 3}
-    val out = Dedup.incrementalLshMd5(docs, deltaMod = 3, sampleMod = 1)
+    val out = Dedup.incrementalLsh(docs, numHashes = 16, bands = 4,
+        deltaMod = 3, sampleMod = 1)
       .collect()
       .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2), r.getDouble(3))))
       .toMap
@@ -616,7 +653,7 @@ class DedupSpec extends AnyFunSuite {
   test("keepBest resolves each near-dup cluster to its highest-quality member") {
     // sampleMod=1: all docs are nodes; docs 0/1 are exact dups → one
     // cluster; winner decided by the hash-trick score with doc_id ties
-    val out = Dedup.keepBest(docs.toDF("doc_id", "text"), sampleMod = 1)
+    val out = Dedup.keepBest(lshDocs, sampleMod = 1)
       .collect()
       .map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), r.getDouble(3), r.getLong(4))).toMap
@@ -628,7 +665,7 @@ class DedupSpec extends AnyFunSuite {
     // identical texts → identical scores → tie broken by min doc_id
     assert(dupCluster._2 == 0L)
     // deterministic under repartition
-    val again = Dedup.keepBest(docs.toDF("doc_id", "text").repartition(7),
+    val again = Dedup.keepBest(lshDocs.repartition(7),
       sampleMod = 1).collect()
       .map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), r.getDouble(3), r.getLong(4))).toMap
@@ -896,9 +933,9 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("lshEval scores LSH candidates against exact-Jaccard truth") {
-    // truth at tau=0.5 over `docs`: (0,1) J=1.0, (0,4)/(1,4) J=0.75;
-    // the case variant 2 sits at J=0.4 and the unrelated doc 3 at ~0
-    val r = Dedup.lshEval(docs, sampleMod = 1).collect()
+    // truth at tau=0.5 over `lshDocs`: (0,1) J=1.0, (0,4)/(1,4) J≈0.94;
+    // the case variant 2 sits at J≈0.15 and the unrelated doc 3 at 0
+    val r = Dedup.lshEval(lshDocs, sampleMod = 1).collect()
     assert(r.length == 1)
     val row = r.head
     val (det, tru, tp) = (row.getLong(0), row.getLong(1), row.getLong(2))
@@ -926,8 +963,8 @@ class DedupSpec extends AnyFunSuite {
     // base owns the {0,1} dup pair plus the unrelated 3; the delta
     // brings 2 (ws/case variant of 0) and 4 (near-dup of 0), so the
     // append must EXTEND a base component through delta-base edges
-    val base = docs.filter(col("doc_id") <= 1 || col("doc_id") === 3)
-    val delta = docs.filter(col("doc_id") === 2 || col("doc_id") === 4)
+    val base = lshDocs.filter(col("doc_id") <= 1 || col("doc_id") === 3)
+    val delta = lshDocs.filter(col("doc_id") === 2 || col("doc_id") === 4)
     val tmp = java.nio.file.Files.createTempDirectory("clmap_grow")
     val grown = tmp.resolve("grown").toString
     val fresh = tmp.resolve("fresh").toString
@@ -935,13 +972,12 @@ class DedupSpec extends AnyFunSuite {
     Dedup.writeSignatureStore(base, store, sampleMod = 1)
     Dedup.writeClusterMap(base, grown, sampleMod = 1)
     Dedup.appendToClusterMap(grown, store, delta, sampleMod = 1)
-    Dedup.writeClusterMap(docs, fresh, sampleMod = 1)
+    Dedup.writeClusterMap(lshDocs, fresh, sampleMod = 1)
     val g = mapRows(grown)
     assert(g.sameElements(mapRows(fresh)) && g.nonEmpty,
       "appended cluster map diverged from fresh re-clustering")
-    // the cross-batch merge really happened: 4 (and on this fixture's
-    // md5 draws possibly 2) joined component 0 — at minimum the
-    // near-dup 4 must carry label 0 with a grown size
+    // the cross-batch merge really happened: the near-dup 4 joined
+    // component 0 — it must carry label 0 with a grown size
     val byDoc = Dedup.readClusterMap(spark, grown)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
       .toMap

@@ -102,7 +102,8 @@ class RetryDeterminismSpec extends AnyFunSuite {
   }
 
   test("MinHash-LSH md5 pairs are identical under retry") {
-    assertRetryIdentical(documents, d => Dedup.minHashLshMd5(d))
+    assertRetryIdentical(documents,
+      d => Dedup.minHashLsh(d, numHashes = 16, bands = 4, sampleMod = 2))
   }
 
   test("globalRank ranks are identical under retry") {

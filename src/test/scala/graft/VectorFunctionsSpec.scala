@@ -52,6 +52,39 @@ class VectorFunctionsSpec extends AnyFunSuite {
     assert(sigs(1L).length == 16)
   }
 
+  test("minhash_signature equals the family's plain SQL form slot for slot") {
+    // the formula the DuckDB oracles state (MinHashSignature.minsSql),
+    // written as plain Spark SQL over md5_prefix60 with p = 2^31 − 1
+    val p = 2147483647L
+    val k = 16
+    val df = Seq(
+      (1L, ""), (1L, "é 中 ß"), (1L, "aa bb cc"),
+      (2L, "ß"), (2L, "中文 字 é"),
+      (3L, ""), (3L, "plain ascii words"), (3L, "aa bb cc")
+    ).toDF("id", "sh")
+    val seeds = spark.range(k).selectExpr("id AS seed",
+      s"1 + md5_prefix60(concat('a:', CAST(id AS STRING))) % ${p - 1} AS a",
+      s"md5_prefix60(concat('b:', CAST(id AS STRING))) % $p AS b")
+    val ab = seeds.collect().map(r => (r.getLong(1), r.getLong(2)))
+    // headroom: a ∈ [1, p−1], b ∈ [0, p) and h < p, so a·h + b < 2^62
+    // + 2^31 — exact BIGINT in both engines
+    assert(ab.forall { case (a, b) => a >= 1 && a <= p - 1 && b >= 0 && b < p })
+    assert(ab.map(_._1).distinct.length == k) // k distinct permutations
+    val plain = df.crossJoin(seeds)
+      .groupBy("id", "seed")
+      .agg(expr(s"min((a * (md5_prefix60(sh) % $p) + b) % $p)").as("mh"))
+      .groupBy("id")
+      .agg(expr("transform(array_sort(collect_list(struct(seed, mh))), x -> x.mh)")
+        .as("sig"))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    val agg = df.groupBy("id")
+      .agg(VectorFunctions.minhash_signature($"sh", k).as("sig"))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    assert(plain.keySet == Set(1L, 2L, 3L))
+    assert(agg == plain)
+    assert(agg.values.flatten.forall(v => v >= 0 && v < p))
+  }
+
   test("hyperplane_bucket: codegen matches interpreted eval; weights centered") {
     val vecs = Seq(
       Tuple1(Array(1.0f, -2.0f, 0.5f, 3.0f)),

@@ -866,8 +866,9 @@ class Gen:
     # rewrite that mirrors the expression's sequential fold
     # (per-element double products, left-to-right accumulation,
     # dot/sqrt(nx*ny) — identical IEEE ops on identical inputs are
-    # bit-identical, the CLAUDE.md rule); minhash_signature (xxhash64,
-    # engine-specific values) is checked via the union-min LAW
+    # bit-identical, the house rule); minhash_signature (whose
+    # values the Dedup MinHash oracles already hash-check through
+    # MinHashSignature.minsSql) is checked here via the union-min LAW
     # sig(A ∪ B) = elementwise-min(sig(A), sig(B)) plus signature
     # width, with DuckDB supplying the expected constants over the
     # same group membership. These templates return (spark_sql,
